@@ -9,6 +9,8 @@ OpenAddresses tables. Everything query functions need, built once.
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StringType
@@ -45,6 +47,16 @@ def sim_from_arrays(ta, tb):
         .otherwise(shared.cast("double") / union)
 
 
+def rational_threshold(tau: float) -> tuple[int, int]:
+    """(p, q) with p/q == tau exactly as a double, q <= 100. Raises
+    ValueError when tau has no such small rational form — the integer
+    rearrangement in sim_ge_arrays would then not be the float predicate."""
+    frac = Fraction(tau).limit_denominator(100)
+    if float(frac) != tau:
+        raise ValueError(f"similarity threshold {tau!r} has no rational form p/q with q <= 100")
+    return frac.numerator, frac.denominator
+
+
 def sim_ge_arrays(ta, tb):
     """Predicate: pg_trgm similarity of two PRECOMPUTED trigram arrays
     >= text.TRGM_SIM_THRESHOLD, with array_intersect referenced exactly ONCE.
@@ -55,18 +67,18 @@ def sim_ge_arrays(ta, tb):
     intersect (an OpenHashSet build per evaluation, the dominant cost of
     the hn value-space join: 137.6M evaluations at bench sf4, 95% rejected)
     ran twice per probed pair. Rearranged over the rationals with
-    tau = 3/10:  shared/(na+nb-shared) >= 3/10
-             <=> 13*shared >= 3*(na+nb)   [union > 0 given na,nb > 0]
-    which references `shared` once. Exact vs the double-arithmetic form:
-    verified exhaustively for all (shared, na, nb) up to 200 (trigram
-    arrays are far smaller) — no float ratio s/u with u <= 400 can fall
-    between double(0.3) and rational 3/10 (interval width ~1.1e-17).
+    tau = p/q (``rational_threshold``; 3/10 today):
+        shared/(na+nb-shared) >= p/q
+    <=> (p+q)*shared >= p*(na+nb)   [union > 0 given na,nb > 0]
+    which references `shared` once. Exact vs the double-arithmetic form for
+    tau = 3/10: verified exhaustively for all (shared, na, nb) up to 200
+    (pytest-pinned; trigram arrays are far smaller) — no float ratio s/u
+    with u <= 400 falls between double(0.3) and rational 3/10.
     The empty-side guard mirrors sim_from_arrays' explicit 0.0 (< tau)."""
-    assert abs(text.TRGM_SIM_THRESHOLD - 0.3) < 1e-12, \
-        "rational rearrangement is derived for tau = 3/10"
+    p, q = rational_threshold(text.TRGM_SIM_THRESHOLD)
     shared = F.size(F.array_intersect(ta, tb))
     return (F.size(ta) > 0) & (F.size(tb) > 0) \
-        & (shared * F.lit(13) >= (F.size(ta) + F.size(tb)) * F.lit(3))
+        & (shared * F.lit(p + q) >= (F.size(ta) + F.size(tb)) * F.lit(p))
 
 
 def pair_similarity_col(a_col, b_col):

@@ -1,6 +1,8 @@
 """ETL semantics tests: optimize/001..014 + wordlist + OA importer."""
 
 import hashlib
+import itertools
+import re
 
 from pyspark.sql import functions as F
 
@@ -135,6 +137,14 @@ def test_dup_clusters_one_action_per_round(spark, monkeypatch):
     assert set(out.values()) == {30} and len(out) == 7
 
 
+def _shingle_set(text, n=3):
+    """Distinct word n-grams; a text shorter than n words is one shingle."""
+    ws = re.findall(r"[a-z0-9]+", (text or "").lower())
+    if len(ws) >= n:
+        return {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
+    return {" ".join(ws)}
+
+
 def test_jaccard_cap_drift(spark):
     """ADVICE r2: dedup_jaccard's max_df cap is a documented workload
     redefinition (capped-set Jaccard != true document Jaccard for pairs
@@ -144,7 +154,6 @@ def test_jaccard_cap_drift(spark):
     (c) an aggressive cap matches the capped-set reference exactly — and the
     capped-vs-exact drift stays quantified."""
     import collections
-    import re
 
     from geospark import dedup
 
@@ -153,13 +162,7 @@ def test_jaccard_cap_drift(spark):
     texts = {r.doc_id: r.text for r in docs.collect()}
     assert len(texts) >= 20
 
-    def sh_set(text, n=3):
-        ws = re.findall(r"[a-z0-9]+", (text or "").lower())
-        if len(ws) >= n:
-            return {" ".join(ws[i:i + n]) for i in range(len(ws) - n + 1)}
-        return {" ".join(ws)}
-
-    sets = {d: sh_set(t) for d, t in texts.items()}
+    sets = {d: _shingle_set(t) for d, t in texts.items()}
     df_ct = collections.Counter(s for ss in sets.values() for s in ss)
 
     def ref_pairs(cap):
@@ -192,6 +195,89 @@ def test_jaccard_cap_drift(spark):
     drift = max((abs(capped[k] - exact[k]) for k in common), default=0.0)
     assert 0.0 <= drift < 0.5, drift
     docs.unpersist()
+
+
+def _minhash_reference(sets, bands=8, rows=8):
+    """Pure-Python minhash signatures: shingle hash int(md5[:15], 16) mod
+    2^32, perm p is ((2p+1)x + 7919p + 104729) mod 4294967311."""
+    def h(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % 2 ** 32
+
+    return {d: [min(((2 * p + 1) * h(x) + 7919 * p + 104729) % 4294967311 for x in ss)
+                for p in range(bands * rows)]
+            for d, ss in sets.items()}
+
+
+def _lsh_reference_pairs(sets, sig, threshold, drop_row=None, bands=8, rows=8):
+    """Bucket on (band, the band's 8 values) — without value ``drop_row``
+    when given — and keep candidates with exact Jaccard >= threshold."""
+    buckets = {}
+    for d, s in sig.items():
+        for b in range(bands):
+            key = tuple(v for r, v in enumerate(s[b * rows:(b + 1) * rows]) if r != drop_row)
+            buckets.setdefault((b, key), []).append(d)
+    out = {}
+    for ds in buckets.values():
+        for a, b in itertools.combinations(sorted(ds), 2):
+            inter = len(sets[a] & sets[b])
+            j = round(inter / (len(sets[a]) + len(sets[b]) - inter), 6)
+            if inter and j >= threshold:
+                out[(a, b)] = j
+    return out
+
+
+def test_minhash_lsh_matches_python_reference(spark):
+    """minhash_signatures and minhash_lsh_pairs equal a pure-Python MinHash-LSH
+    (closed-form perms, 8x8 band-tuple buckets, exact Jaccard) on the first
+    120 fixture documents plus 24 planted near-duplicates (every 7th, 11th,
+    17th or 29th word replaced). The data is chosen so that dropping any one
+    of a band's 8 values from the bucket key adds pairs at threshold 0.3, so
+    a key missing a value cannot pass."""
+    from geospark import dedup
+
+    texts = {r.doc_id: r.text for r in
+             spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+             .filter("doc_id < 120").select("doc_id", "text").collect()}
+    long_docs = [d for d in sorted(texts) if len(re.findall(r"[a-z0-9]+", (texts[d] or "").lower())) >= 30]
+    for k, d in enumerate(long_docs[:24]):
+        m = (7, 11, 17, 29)[k % 4]
+        texts[1000 + d] = " ".join(f"planted{k}x{i}" if i % m == m // 2 else w
+                                   for i, w in enumerate(texts[d].split()))
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    sets = {d: _shingle_set(t) for d, t in texts.items()}
+    sig = _minhash_reference(sets)
+
+    got_sig = {(r.doc_id, r.perm): r.minhash for r in dedup.minhash_signatures(docs).collect()}
+    assert got_sig == {(d, p): v for d, s in sig.items() for p, v in enumerate(s)}
+
+    for th in (0.5, 0.3):
+        want = _lsh_reference_pairs(sets, sig, th)
+        got = {(r.doc_a, r.doc_b): r.jaccard
+               for r in dedup.minhash_lsh_pairs(docs, threshold=th).collect()}
+        assert got == want, th
+    ref = _lsh_reference_pairs(sets, sig, 0.3)
+    assert sum(b >= 1000 for _, b in ref) >= 5, ref  # planted pairs are found
+    for r in range(8):
+        assert _lsh_reference_pairs(sets, sig, 0.3, drop_row=r) != ref, r
+
+
+def test_etl_ids_are_lowercase_sha256_hex(geo):
+    """reverse._pack_candidates packs ``id`` and ``street_id`` with unhex,
+    which is exact and order-preserving only on lowercase even-length hex;
+    anything else turns NULL and silently reorders min_by winners. Every
+    non-NULL ETL id column of the fixture world is 64 lowercase hex digits."""
+    struct = geo["struct"]
+    checked = 0
+    for table, cols in (("struct_house", ("id", "street_id")),
+                        ("struct_streets", ("id", "city_id")),
+                        ("struct_cities", ("id",))):
+        df = struct[table]
+        for c in cols:
+            non_null = df.filter(F.col(c).isNotNull())
+            bad = non_null.filter(~F.col(c).rlike("^[0-9a-f]{64}$")).select(c).limit(3).collect()
+            assert bad == [], (table, c, bad)
+            checked += non_null.count()
+    assert checked > 0
 
 
 def test_oa_importer_semantics(spark, geo):

@@ -210,6 +210,32 @@ def test_sim_ge_arrays_matches_threshold_form(spark):
     assert [r.new for r in out if r.rid == rid] == [True]
 
 
+def test_rational_threshold_equals_float_form(spark, monkeypatch):
+    """sim_ge_arrays derives its integer coefficients from
+    text.TRGM_SIM_THRESHOLD = p/q: (p+q)*shared >= p*(na+nb). That equals
+    the double form shared/(na+nb-shared) >= tau for every (shared, na, nb)
+    up to 200, and a threshold with no small rational form raises."""
+    import numpy as np
+
+    from geospark import text
+    from geospark.tables import rational_threshold, sim_ge_arrays
+
+    tau = text.TRGM_SIM_THRESHOLD
+    p, q = rational_threshold(tau)
+    nb, shared = np.meshgrid(np.arange(1, 201), np.arange(0, 201), indexing="ij")
+    for na in range(1, 201):
+        ok = shared <= np.minimum(na, nb)
+        float_form = shared[ok] / (na + nb[ok] - shared[ok]) >= tau
+        int_form = (p + q) * shared[ok] >= p * (na + nb[ok])
+        assert np.array_equal(float_form, int_form), na
+
+    with pytest.raises(ValueError):
+        rational_threshold(0.3141592653589793)
+    monkeypatch.setattr(text, "TRGM_SIM_THRESHOLD", 0.3141592653589793)
+    with pytest.raises(ValueError):
+        sim_ge_arrays(F.col("ta"), F.col("tb"))
+
+
 def test_admin_overlap_multiplicity(spark, geo):
     """Overlapping admin_level-6 polygons duplicate result rows exactly like
     the reference's LEFT JOIN (§7.4.7) — never dedup."""

@@ -13,6 +13,7 @@ SUBSET = [
     "reverse_geocode", "forward_geocode",
     "extract_hashes", "mine_addresses",
     "doc_tokens", "doc_langid", "dedup_jaccard", "dedup_simhash_pairs",
+    "dedup_minhash_sigs", "dedup_minhash_lsh", "dedup_clusters",
     "ann_topk", "ann_ivf_kmeans", "emb_dups", "tpch_pricing", "topk_orders",
 ]
 

@@ -47,8 +47,7 @@ def test_dedup_pair_generators_have_no_nested_loops(spark):
     emb = spark.createDataFrame(
         [(i, [float(j + i) for j in range(8)]) for i in range(20)],
         "vec_id long, embedding array<double>")
-    # (minhash_lsh_pairs checkpoints its result eagerly, so its join plan is
-    # not inspectable post-hoc; its banding shares the shape asserted here)
+    # minhash_lsh_pairs: see test_minhash_lsh_candidate_plan
     for df in (
         dedup.simhash_pairs(docs, max_hamming=3),
         simsearch.embedding_dup_pairs(emb, threshold=0.9),
@@ -56,6 +55,28 @@ def test_dedup_pair_generators_have_no_nested_loops(spark):
         plan = _plan(df)
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_minhash_lsh_candidate_plan(spark):
+    """minhash_lsh_pairs checkpoints its result, so its candidate frame is
+    planned here through the same private helpers: the bucket join is an
+    equi-join on the band's own minhash values (no md5 key, no nested loop)
+    over a signature aggregate of rows_per_band mins per (doc, band), not one
+    64-wide aggregate per document."""
+    from geospark import dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"some words number {i} appear here repeatedly") for i in range(50)],
+        "doc_id long, text string")
+    rows = dedup.N_PERMS // dedup.LSH_BANDS
+    sig = dedup._band_signatures(dedup.shingles(docs), dedup.LSH_BANDS, rows)
+    plan = _plan(dedup._lsh_candidates(sig, rows))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    joins = [ln for ln in plan.splitlines() if "HashJoin" in ln or "SortMergeJoin" in ln]
+    assert joins and all("band#" in ln and f"r{rows - 1}#" in ln and "md5(" not in ln for ln in joins), joins
+    aggs = [ln.count("min(") for ln in plan.splitlines() if "HashAggregate" in ln and "min(" in ln]
+    assert aggs and set(aggs) == {rows}, aggs
 
 
 def test_raster_plans_stay_jvm_and_narrow(spark, geo):
